@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pos_pipeline_core_etl_spark.functions.rounding import hround, hround_sql
+from pos_pipeline_core_etl_spark.session import session_cache_key
 from pos_pipeline_core_etl_spark.sources.tables import load_table
 
 
@@ -1127,9 +1128,7 @@ _EDGE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 def _shared_edges(
     spark: SparkSession, sf_dir: str, kind: str, build
 ) -> DataFrame:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind)
+    key = (*session_cache_key(spark, sf_dir), kind)
     df = _EDGE_CACHE.get(key)
     if df is None:
         df = build().localCheckpoint(eager=True)

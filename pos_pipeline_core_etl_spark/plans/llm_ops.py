@@ -20,6 +20,7 @@ from pos_pipeline_core_etl_spark.operators import (
     similarity,
     text,
 )
+from pos_pipeline_core_etl_spark.session import session_cache_key
 from pos_pipeline_core_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -4612,9 +4613,9 @@ QUERIES["sim_ivfpq_kmeans_topk"] = (sim_ivfpq_kmeans_topk, SIM_IVFPQ_KMEANS_TOPK
 
 # one trained index per (session, sf_dir): the deployment shape — a
 # serving loop holds the IvfPqIndex and pays training ONCE per corpus
-# snapshot; keyed by session id so a fresh SparkSession can't read
-# another session's dead checkpoint blocks
-_IVFPQ_INDEX_CACHE: dict[tuple[int, str], object] = {}
+# snapshot; keyed like analytics._EDGE_CACHE (session_cache_key) so a
+# fresh SparkSession can't read another session's dead checkpoint blocks
+_IVFPQ_INDEX_CACHE: dict[tuple[str, str], object] = {}
 
 
 def sim_ivfpq_query_only(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4630,7 +4631,7 @@ def sim_ivfpq_query_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checkable against the SAME oracle as the composed form: the
     index build is deterministic (fixed-init Lloyd + PQ, integer
     quantization), so prebuilt-vs-inline produces identical rows."""
-    key = (id(spark), sf_dir)
+    key = session_cache_key(spark, sf_dir)
     index = _IVFPQ_INDEX_CACHE.get(key)
     if index is None:
         emb = load_table(spark, sf_dir, "embeddings")

@@ -1,17 +1,30 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the bench headline
-queries at sf0.001 (plan shape is SF-independent; tiny SF keeps this
-fast). Run: python tools/dump_plans.py"""
+"""Dump physical plans at sf0.001 (plan shape is SF-independent; tiny SF
+keeps this fast).
+
+    python tools/dump_plans.py
+        Regenerate PLANS.md: the executed (AQE final) plans of the bench
+        headline queries.
+
+    python tools/dump_plans.py --label r13 before q1,q2,...
+        Write plans/r13/<query>_before.txt, the .explain("formatted")
+        plan of each named query, as before/after optimization evidence
+        (Exchange count, join strategy, PushedFilters, codegen spans).
+        AQE final plans are runtime artifacts and are cited from bench
+        or profile runs instead. PLANS_SF_DIR overrides the input.
+"""
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pos_pipeline_core_etl_spark.session import get_spark  # noqa: E402
 from pos_pipeline_core_etl_spark import registry  # noqa: E402
 
-SF = "/root/testdata/sf0.001"
+SF = os.environ.get("PLANS_SF_DIR", "/root/testdata/sf0.001")
 HEADLINE = (
     "payments_daily_mart", "agg_pricing_summary", "join_broadcast_dims",
     "scan_filter_project", "dedup_keep_first", "sales_by_ticket_mart",
@@ -63,9 +76,24 @@ HEADLINE = (
 )
 
 
-def main():
-    spark = get_spark(app_name="plandump")
-    spark.sparkContext.setLogLevel("ERROR")
+def dump_labelled(spark, label: str, tag: str, names: list[str]) -> None:
+    """Write plans/<label>/<query>_<tag>.txt for each named query."""
+    qs = registry.all_queries()
+    outdir = os.path.join(ROOT, "plans", label)
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        df = qs[name](spark, SF)
+        txt = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(txt)
+        print(f"wrote {path} ({txt.count('Exchange')} Exchange refs)")
+
+
+def dump_headline(spark) -> None:
+    """Regenerate PLANS.md from the headline queries' executed plans."""
     qs = registry.all_queries()
     out = [
         "# PLANS — executed physical plans of the headline queries",
@@ -90,8 +118,26 @@ def main():
         if len(lines) > 60:
             lines = lines[:60] + [f"... ({len(lines) - 60} more lines)"]
         out += [f"## {name}", "", "```", *lines, "```", ""]
-    open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w").write("\n".join(out))
+    open(os.path.join(ROOT, "PLANS.md"), "w").write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--label", help="plans/ subdirectory, e.g. r13")
+    p.add_argument("tag", nargs="?", help="file suffix, e.g. before or after")
+    p.add_argument("queries", nargs="?", help="comma-separated query names")
+    args = p.parse_args()
+    if args.label and not (args.tag and args.queries):
+        p.error("--label needs a tag and a query list")
+    if not args.label and (args.tag or args.queries):
+        p.error("a tag and a query list need --label")
+    spark = get_spark(app_name=f"dump_plans_{args.label or 'headline'}")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.label:
+        dump_labelled(spark, args.label, args.tag, args.queries.split(","))
+    else:
+        dump_headline(spark)
     spark.stop()
 
 

@@ -893,16 +893,13 @@ def connected_components(
     Memory shape (round 11, VERDICT r10 #3 — the 15M-key ER resolve
     OOM'd in THESE rounds at 64g over a 238M-pair graph):
 
-    - The edge list is materialized ONCE, symmetrized and
-      **hash-partitioned on the join key** in the SQL cache
-      (columnar-compressed MEMORY_AND_DISK — spills instead of growing
-      the heap).  The cache preserves that partitioning, so the
-      per-round join shuffles ONLY the node-sized labels; the pre-r12
-      forms re-exchanged the edge side every round (r11 held an
-      oriented checkpoint to halve the persisted footprint, but a
-      localCheckpoint forgets its partitioning, so every round paid a
-      2E-row exchange — strictly more disk+network per round than the
-      one-time symmetrized cache).
+    - The oriented edge list is materialized ONCE (a MEMORY_AND_DISK
+      local checkpoint — spills instead of growing the heap) and
+      symmetrized lazily.  A localCheckpoint forgets its partitioning,
+      so every round re-exchanges the 2E-row edge side; a
+      hash-partitioned edge cache would avoid that, but the only
+      measurement of one (sf0.1) was slower (1.5 s → 2.7 s warm), so
+      it is not offered.
     - Label checkpoints store **serialized** (PySpark's MEMORY_AND_DISK
       constant is the serialized level; the default localCheckpoint
       level is the DESER variant).
@@ -923,30 +920,9 @@ def connected_components(
     oriented = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    # r12 optimization pass (guide §2.4): on a LARGE graph the dominant
-    # per-round byte mover is the edge side of the message join — the
-    # lazily symmetrized view re-crosses its exchange every round
-    # because a localCheckpoint forgets partitioning (LogicalRDD
-    # reports UnknownPartitioning — measured).  When
-    # ``spark.pos.cc.prepartitionEdges=true`` the symmetrized list is
-    # cached ALREADY HASH-PARTITIONED on the join key (the SQL cache
-    # preserves the ``repartition`` partitioning), so each round
-    # shuffles only the node-sized labels.  This is OFF by default:
-    # below ~10⁶ edges the one-time cache build + per-round
-    # InMemoryTableScan costs MORE than the tiny exchanges it removes
-    # (micro-measured at sf0.1: 1.5 s → 2.7 s warm), while the 30M-key
-    # ER ladder leg runs with it on — see OPTIMIZATION_r12.md.
-    prepartition = (
-        edges.sparkSession.conf.get(
-            "spark.pos.cc.prepartitionEdges", "false"
-        ).lower()
-        == "true"
-    )
     sym = oriented.unionByName(
         oriented.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    if prepartition:
-        sym = sym.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()
@@ -1038,8 +1014,6 @@ def connected_components(
     # the returned frame reads only its own checkpoint blocks — the
     # edge list is done serving the loop either way
     _release_checkpoint(oriented)
-    if prepartition:
-        sym.unpersist(False)
     if not converged:
         # Unconverged labels would silently diverge from the full-
         # reachability oracle (a long duplicate chain exceeds the round

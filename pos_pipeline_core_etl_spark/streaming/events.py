@@ -8,11 +8,34 @@ sessionization. The batch twins of both queries live in
 ``plans.streaming_queries`` and are oracle-checked; the streaming
 versions are asserted equal to the batch results in tests (file source
 + ``availableNow`` drains the table deterministically).
+
+The incremental maintainers further down (dedup, entity resolution,
+the mart, the sketches) share one contract, implemented once by the
+helpers that open this module:
+
+- **Drain.** A run is one ``availableNow`` drain: the query consumes
+  every file present when it starts, split into micro-batches where the
+  source caps files per trigger, then stops (:func:`drain_foreach_batch`,
+  :func:`drain_to_memory`).
+- **Per-batch-id overwrite.** A ``foreachBatch`` body writes each output
+  to ``<dir>/batch_id=<id>`` with ``overwrite``
+  (:func:`write_batch_idempotent`). A batch replayed after a failure runs
+  again under the same id and rewrites its own directories, so the sink
+  converges to exactly-once.
+- **State.** A maintainer's state is the latest partition with an id
+  below the running batch's (:func:`batch_partitions` with
+  ``before=batch_id``; counter tables fold through
+  :func:`fold_counter_batch`). A replay never sees its own earlier
+  attempt, so it reads the same state as the first attempt did.
+- **Empty stream.** A readout over a state directory with no partition
+  returns a typed empty frame with the readout's schema, not an error.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pos_pipeline_core_etl_spark.functions.rounding import hround
@@ -20,6 +43,94 @@ from pos_pipeline_core_etl_spark.functions.rounding import hround
 WINDOW = "5 minutes"
 WATERMARK = "10 minutes"
 SESSION_GAP = "30 minutes"
+
+
+def write_batch_idempotent(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Idempotent micro-batch writer: the target directory is a pure
+    function of ``batch_id``, and the write is ``overwrite``. foreachBatch
+    gives at-least-once delivery — a batch replayed after a failure
+    re-runs with the SAME id, overwrites its own directory, and the sink
+    converges to exactly-once. (Same contract a Delta/transactional sink
+    provides via txn version; expressed here over plain parquet.)"""
+    import os
+
+    batch_df.write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"batch_id={batch_id}")
+    )
+
+
+def drain_foreach_batch(
+    stream: DataFrame, checkpoint_dir: str, body: Callable[[DataFrame, int], None]
+) -> None:
+    """Drain ``stream`` once (``availableNow``) through the ``foreachBatch``
+    body ``body(batch_df, batch_id)``, checkpointed at ``checkpoint_dir``.
+    A body that raises fails the query (``StreamingQueryException``); the
+    next drain with the same checkpoint replays that batch under its id."""
+    q = (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def drain_to_memory(frame: DataFrame, output_mode: str, query_name: str) -> DataFrame:
+    """Drain ``frame`` once (``availableNow``) into the memory sink
+    ``query_name`` in ``output_mode`` and return the sink's table."""
+    q = (
+        frame.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return frame.sparkSession.sql(f"SELECT * FROM {query_name}")
+
+
+def batch_partitions(base_dir: str, before: int | None = None) -> list[str]:
+    """Paths of the ``batch_id=N`` partitions under ``base_dir``, in
+    ascending integer ``N`` order (``batch_id=10`` after ``batch_id=9``);
+    with ``before``, only those with ``N < before``. Other entries
+    (``_spark_metadata``, ``.tmp`` files) are ignored, and a missing
+    ``base_dir`` has none."""
+    import os
+
+    if not os.path.isdir(base_dir):
+        return []
+    parts = []
+    for d in os.listdir(base_dir):
+        n = d.removeprefix("batch_id=")
+        if n != d and n.isdecimal() and (before is None or int(n) < before):
+            parts.append((int(n), os.path.join(base_dir, d)))
+    return [p for _, p in sorted(parts)]
+
+
+def fold_counter_batch(
+    batch_counters: DataFrame,
+    batch_id: int,
+    state_dir: str,
+    keys: list[str],
+    merge: Callable[[str], Column] = F.sum,
+) -> None:
+    """Fold one batch's counter table into a counter maintainer's state:
+    union it with the latest prior state partition, re-aggregate every
+    non-key column per ``keys`` cell with ``merge`` (``F.sum`` for
+    counts, ``F.bit_or`` for Bloom words), and write the result as this
+    batch's partition. With no prior state the batch's table is the
+    state."""
+    state = batch_counters
+    prior = batch_partitions(state_dir, before=batch_id)
+    if prior:
+        values = [c for c in batch_counters.columns if c not in keys]
+        state = (
+            batch_counters.sparkSession.read.parquet(prior[-1])
+            .unionByName(batch_counters)
+            .groupBy(*keys)
+            .agg(*[merge(c).alias(c) for c in values])
+        )
+    write_batch_idempotent(state.localCheckpoint(eager=True), batch_id, state_dir)
 
 
 def tumbling_counts_batch(events: DataFrame) -> DataFrame:
@@ -122,16 +233,8 @@ def run_streaming_stateful_counters(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # memory sink in update mode appends snapshots; last row per key wins
-    snap = spark.sql(f"SELECT * FROM {query_name}")
+    snap = drain_to_memory(out, "update", query_name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy(F.col("n").desc())
@@ -224,21 +327,13 @@ def run_streaming_transition_matrix(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    emitted = drain_to_memory(out, "append", query_name)
     from pyspark.sql import Window
 
     from pos_pipeline_core_etl_spark.functions.rounding import hround
 
     counts = (
-        spark.sql(f"SELECT * FROM {query_name}")
-        .groupBy("from_type", "to_type")
+        emitted.groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     tot = Window.partitionBy("from_type")
@@ -247,20 +342,6 @@ def run_streaming_transition_matrix(
         "to_type",
         "n",
         hround(F.col("n") / F.sum("n").over(tot), 6).alias("p"),
-    )
-
-
-def write_batch_idempotent(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
-    """Idempotent micro-batch writer: the target directory is a pure
-    function of ``batch_id``, and the write is ``overwrite``. foreachBatch
-    gives at-least-once delivery — a batch replayed after a failure
-    re-runs with the SAME id, overwrites its own directory, and the sink
-    converges to exactly-once. (Same contract a Delta/transactional sink
-    provides via txn version; expressed here over plain parquet.)"""
-    import os
-
-    batch_df.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
     )
 
 
@@ -282,15 +363,9 @@ def run_streaming_foreach_batch(
     enriched = stream.where(F.col("value") > 0).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    q = (
-        enriched.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        enriched, checkpoint_dir, lambda df, bid: write_batch_idempotent(df, bid, out_dir)
     )
-    q.awaitTermination()
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -309,15 +384,7 @@ def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str, query_name: 
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain_to_memory(agg, "complete", query_name)
 
 
 def dedup_batch(events: DataFrame) -> DataFrame:
@@ -349,15 +416,7 @@ def run_streaming_dedup(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type", hround(F.col("value"), 2).alias("value"))
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain_to_memory(deduped, "append", query_name)
 
 
 def purchase_view_join_batch(events: DataFrame) -> DataFrame:
@@ -423,15 +482,7 @@ def run_streaming_purchase_view_join(
     into a memory sink (``availableNow``); asserted equal to
     :func:`purchase_view_join_batch` in tests."""
     joined = attribution_join_stream(read_events_stream(spark, sf_dir))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain_to_memory(joined, "append", query_name)
 
 
 def run_attribution_join_incremental(
@@ -476,27 +527,9 @@ def run_attribution_join_incremental(
             f"ts_encoding must be nanos_long|timestamp_ntz, got {ts_encoding!r}"
         )
     joined = attribution_join_stream(stream)
-    q = (
-        joined.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        joined, checkpoint_dir, lambda df, bid: write_batch_idempotent(df, bid, out_dir)
     )
-    q.awaitTermination()
-
-
-def _prior_partitions(base_dir: str, batch_id: int) -> list[str]:
-    """Index partitions from batches BEFORE ``batch_id`` (this batch's
-    own partition may exist from a failed attempt — excluded)."""
-    import os
-
-    return [
-        os.path.join(base_dir, d)
-        for d in (os.listdir(base_dir) if os.path.isdir(base_dir) else [])
-        if d.startswith("batch_id=") and d != f"batch_id={batch_id}"
-    ]
 
 
 def dedup_index_batch(
@@ -544,7 +577,7 @@ def dedup_index_batch(
     spark = batch_df.sparkSession
     fp = fingerprint(batch_df).select("doc_id", "fp")
 
-    prior = _prior_partitions(index_dir, batch_id)
+    prior = batch_partitions(index_dir, before=batch_id)
     if prior:
         idx = spark.read.option("basePath", index_dir).parquet(*prior)
         canon = idx.groupBy("fp").agg(F.min("doc_id").alias("exact_dup_of"))
@@ -568,7 +601,7 @@ def dedup_index_batch(
             minhash_signatures(batch_df, "text", k=LSH_BANDS * LSH_ROWS)
         )
         bb = bb_all.localCheckpoint(eager=False)
-        prior_bands = _prior_partitions(band_index_dir, batch_id)
+        prior_bands = batch_partitions(band_index_dir, before=batch_id)
         if prior_bands:
             cb = (
                 spark.read.option("basePath", band_index_dir)
@@ -638,17 +671,13 @@ def run_streaming_incremental_dedup(
     if band_index_dir is None:
         band_index_dir = index_dir + "_bands"
     raw = spark.readStream.schema("doc_id long, text string").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: dedup_index_batch(
-                df, bid, out_dir, index_dir, band_index_dir=band_index_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: dedup_index_batch(
+            df, bid, out_dir, index_dir, band_index_dir=band_index_dir
+        ),
     )
-    q.awaitTermination()
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -673,17 +702,9 @@ def run_streaming_windowed_topk(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.to_date(F.col("window.start")).alias("day"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    snap = drain_to_memory(agg, "complete", query_name)
     from pyspark.sql import Window
 
-    snap = spark.sql(f"SELECT * FROM {query_name}")
     w = Window.partitionBy("day").orderBy(F.col("n").desc(), F.col("event_type"))
     return (
         snap.withColumn("rnk", F.row_number().over(w))
@@ -727,7 +748,7 @@ def image_dedup_index_batch(
         eager=False
     )
 
-    prior = _prior_partitions(index_dir, batch_id)
+    prior = batch_partitions(index_dir, before=batch_id)
     if prior:
         idx = (
             spark.read.option("basePath", index_dir)
@@ -822,15 +843,11 @@ def run_streaming_image_dedup(
     index, capped one-sided banding for the near leg — the corpus is
     never re-hashed and never joined against itself."""
     raw = spark.readStream.schema("doc_id long, payload binary").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: image_dedup_index_batch(df, bid, out_dir, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: image_dedup_index_batch(df, bid, out_dir, index_dir),
     )
-    q.awaitTermination()
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -879,7 +896,7 @@ def mart_maintenance_batch(
     pt_written = spark.read.parquet(own_dir)
     affected = pt_written.select("fecha").distinct()
     allp = pt_written
-    for p in _prior_partitions(partials_dir, batch_id):
+    for p in batch_partitions(partials_dir, before=batch_id):
         allp = allp.unionByName(spark.read.parquet(p))
     touched = allp.join(F.broadcast(affected), ["fecha"], "left_semi")
     fresh = daily_from_per_ticket(merge_per_ticket(touched), holidays)
@@ -905,17 +922,13 @@ def run_streaming_mart_maintenance(
     the mart equals build_payments_daily over every fact row consumed
     so far — the materialized-view contract."""
     raw = spark.readStream.schema(FACT_STREAM_SCHEMA).parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: mart_maintenance_batch(
-                df, bid, partials_dir, mart_dir, holidays
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: mart_maintenance_batch(
+            df, bid, partials_dir, mart_dir, holidays
+        ),
     )
-    q.awaitTermination()
     return spark.read.parquet(mart_dir)
 
 
@@ -1002,13 +1015,7 @@ def run_streaming_decontaminate_fuzzy(
         )
         write_batch_idempotent(report, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(raw, checkpoint_dir, score_batch)
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -1047,13 +1054,7 @@ def run_streaming_decontaminate_spans(
         out = redact_spans_with_wids(batch_df.select("doc_id", "text"), bw)
         write_batch_idempotent(out, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(redact_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(raw, checkpoint_dir, redact_batch)
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -1085,13 +1086,7 @@ def run_streaming_lr_scores(
         scored = lr_scores(lr_features(batch_df), w)
         write_batch_idempotent(scored, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(raw, checkpoint_dir, score_batch)
     return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
 
 
@@ -1134,7 +1129,7 @@ def er_link_batch(
         F.explode(deletion_variants_col("key", depth=1)).alias("variant"),
     ).localCheckpoint(eager=False)
 
-    prior = _prior_partitions(key_index_dir, batch_id)
+    prior = batch_partitions(key_index_dir, before=batch_id)
     legs = []
     if prior:
         pv = (
@@ -1206,17 +1201,13 @@ def run_streaming_entity_resolution(
     from pos_pipeline_core_etl_spark.operators.dedup import connected_components
 
     raw = spark.readStream.schema("id long, key string").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: er_link_batch(
-                df, bid, links_dir, key_index_dir, max_bucket_size=max_bucket_size
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: er_link_batch(
+            df, bid, links_dir, key_index_dir, max_bucket_size=max_bucket_size
+        ),
     )
-    q.awaitTermination()
     keys = (
         spark.read.option("basePath", key_index_dir)
         .parquet(key_index_dir + "/batch_id=*")
@@ -1281,15 +1272,10 @@ def kmv_sketch_batch(
         )
         .distinct()
     )
-    prior = [
-        p
-        for p in _prior_partitions(sketch_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
+    prior = batch_partitions(sketch_dir, before=batch_id)
     if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
         merged = (
-            spark.read.parquet(latest)
+            spark.read.parquet(prior[-1])
             .select("grp", "h")
             .unionByName(batch_hashes)
             .distinct()
@@ -1329,8 +1315,6 @@ def run_streaming_kmv_sketch(
     per-group estimate snapshot (the highest batch_id partition — the
     state after the whole stream, which the tests assert equals the
     one-shot batch estimate on the same rows)."""
-    import os
-
     # one file per micro-batch (availableNow honors the cap and splits
     # the backlog) so the maintainer demonstrably runs INCREMENTALLY —
     # without it the whole backlog collapses into a single batch and
@@ -1340,22 +1324,14 @@ def run_streaming_kmv_sketch(
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: kmv_sketch_batch(
-                df, bid, out_dir, sketch_dir, group_col, key_col, k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: kmv_sketch_batch(
+            df, bid, out_dir, sketch_dir, group_col, key_col, k
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(out_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(out_dir)
-        else []
-    )
+    parts = batch_partitions(out_dir)
     if not parts:
         # drained stream produced zero batches (empty/missing
         # stream_dir) — return the empty estimate frame instead of an
@@ -1363,8 +1339,7 @@ def run_streaming_kmv_sketch(
         # always carries (grp, kmv_estimate) — the maintainer aliases
         # group_col to "grp"
         return spark.createDataFrame([], "grp string, kmv_estimate double")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(out_dir, final))
+    return spark.read.parquet(parts[-1])
 
 
 def cms_counter_batch(
@@ -1395,24 +1370,8 @@ def cms_counter_batch(
     proof non-vacuous."""
     from pos_pipeline_core_etl_spark.operators.sketches import cms_counters
 
-    spark = batch_df.sparkSession
     batch_counters = cms_counters(batch_df, key_col, depth, width)
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged = (
-            spark.read.parquet(latest)
-            .unionByName(batch_counters)
-            .groupBy("d", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = batch_counters
-    write_batch_idempotent(merged.localCheckpoint(eager=True), batch_id, counter_dir)
+    fold_counter_batch(batch_counters, batch_id, counter_dir, ["d", "b"])
 
 
 def run_streaming_cms_sketch(
@@ -1429,33 +1388,22 @@ def run_streaming_cms_sketch(
     with availableNow and return the FINAL (d, b, cnt) counter table —
     which the tests assert equals the one-shot batch
     ``cms_counters`` on the same rows, cell for cell."""
-    import os
-
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: cms_counter_batch(
-                df, bid, counter_dir, key_col, depth, width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: cms_counter_batch(
+            df, bid, counter_dir, key_col, depth, width
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
+    parts = batch_partitions(counter_dir)
     if not parts:
         return spark.createDataFrame([], "d int, b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return spark.read.parquet(parts[-1])
 
 
 def hist_counter_batch(
@@ -1493,24 +1441,8 @@ def hist_counter_batch(
         hist_counters_fixed,
     )
 
-    spark = batch_df.sparkSession
     batch_counters = hist_counters_fixed(batch_df, value_col, mn, mx, buckets)
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged = (
-            spark.read.parquet(latest)
-            .unionByName(batch_counters)
-            .groupBy("b")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = batch_counters
-    write_batch_idempotent(merged.localCheckpoint(eager=True), batch_id, counter_dir)
+    fold_counter_batch(batch_counters, batch_id, counter_dir, ["b"])
 
 
 def run_streaming_hist_sketch(
@@ -1528,33 +1460,22 @@ def run_streaming_hist_sketch(
     availableNow and return the FINAL (b, cnt) counter table — which
     the tests assert equals the one-shot ``hist_counters_fixed`` on the
     same rows, cell for cell (the mergeability proof, streamed)."""
-    import os
-
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: hist_counter_batch(
-                df, bid, counter_dir, value_col, mn, mx, buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: hist_counter_batch(
+            df, bid, counter_dir, value_col, mn, mx, buckets
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
+    parts = batch_partitions(counter_dir)
     if not parts:
         return spark.createDataFrame([], "b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return spark.read.parquet(parts[-1])
 
 
 def hist_grouped_counter_batch(
@@ -1583,26 +1504,10 @@ def hist_grouped_counter_batch(
         hist_counters_fixed_grouped,
     )
 
-    spark = batch_df.sparkSession
     batch_counters = hist_counters_fixed_grouped(
         batch_df, group_col, value_col, mn, mx, buckets
     )
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged = (
-            spark.read.parquet(latest)
-            .unionByName(batch_counters)
-            .groupBy("g", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = batch_counters
-    write_batch_idempotent(merged.localCheckpoint(eager=True), batch_id, counter_dir)
+    fold_counter_batch(batch_counters, batch_id, counter_dir, ["g", "b"])
 
 
 def run_streaming_hist_grouped_sketch(
@@ -1621,33 +1526,22 @@ def run_streaming_hist_grouped_sketch(
     with availableNow and return the FINAL ``(g, b, cnt)`` counter
     table — asserted equal to the one-shot
     ``hist_counters_fixed_grouped`` on the same rows, cell for cell."""
-    import os
-
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: hist_grouped_counter_batch(
-                df, bid, counter_dir, group_col, value_col, mn, mx, buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: hist_grouped_counter_batch(
+            df, bid, counter_dir, group_col, value_col, mn, mx, buckets
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
+    parts = batch_partitions(counter_dir)
     if not parts:
         return spark.createDataFrame([], "g string, b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return spark.read.parquet(parts[-1])
 
 
 def priority_sketch_batch(
@@ -1712,20 +1606,10 @@ def priority_sketch_batch(
         F.coalesce(F.sum("w"), F.lit(0.0)).alias("w_exact"),
     )
 
-    def _latest(base_dir: str):
-        prior = [
-            p
-            for p in _prior_partitions(base_dir, batch_id)
-            if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-        ]
-        if not prior:
-            return None
-        return max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-
-    latest_sk = _latest(sketch_dir)
-    if latest_sk is not None:
+    prior_sk = batch_partitions(sketch_dir, before=batch_id)
+    if prior_sk:
         merged = (
-            spark.read.parquet(latest_sk)
+            spark.read.parquet(prior_sk[-1])
             .select("h", "w", "pr")
             .unionByName(batch_sk)
         )
@@ -1742,21 +1626,8 @@ def priority_sketch_batch(
         .filter(F.col("rn") <= k + 1)
         .localCheckpoint(eager=True)
     )
-    latest_tot = _latest(totals_dir)
-    if latest_tot is not None:
-        prior_tot = spark.read.parquet(latest_tot)
-        tot = (
-            prior_tot.unionByName(batch_tot)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("w_exact").alias("w_exact"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        tot = batch_tot.localCheckpoint(eager=True)
     write_batch_idempotent(sk, batch_id, sketch_dir)
-    write_batch_idempotent(tot, batch_id, totals_dir)
+    fold_counter_batch(batch_tot, batch_id, totals_dir, [])
 
 
 def run_streaming_priority_sample(
@@ -1776,8 +1647,6 @@ def run_streaming_priority_sample(
     SAME ``priority_summary_from_parts`` the one-shot operator uses,
     which the tests assert equals the one-shot summary on the same
     rows."""
-    import os
-
     from pos_pipeline_core_etl_spark.operators.sketches import (
         priority_summary_from_parts,
     )
@@ -1787,39 +1656,24 @@ def run_streaming_priority_sample(
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: priority_sketch_batch(
-                df, bid, sketch_dir, totals_dir, key_col, weight_col, k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: priority_sketch_batch(
+            df, bid, sketch_dir, totals_dir, key_col, weight_col, k
+        ),
     )
-    q.awaitTermination()
-
-    def _final(base_dir: str):
-        parts = (
-            [d for d in os.listdir(base_dir) if d.startswith("batch_id=")]
-            if os.path.isdir(base_dir)
-            else []
-        )
-        if not parts:
-            return None
-        final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-        return spark.read.parquet(os.path.join(base_dir, final))
-
-    ranked = _final(sketch_dir)
-    exact = _final(totals_dir)
-    if ranked is None or exact is None:
+    ranked, exact = batch_partitions(sketch_dir), batch_partitions(totals_dir)
+    if not ranked or not exact:
         return spark.createDataFrame(
             [],
             "n_rows long, sample_k int, n_sample long, n_heavy long, "
             "tau double, w_total_exact double, w_total_estimate double, "
             "rel_err double",
         )
-    return priority_summary_from_parts(exact, ranked, k)
+    return priority_summary_from_parts(
+        spark.read.parquet(exact[-1]), spark.read.parquet(ranked[-1]), k
+    )
 
 
 def bloom_word_batch(
@@ -1843,24 +1697,8 @@ def bloom_word_batch(
     maxFilesPerTrigger=1 multi-batch drain guard."""
     from pos_pipeline_core_etl_spark.operators.sketches import bloom_words
 
-    spark = batch_df.sparkSession
     batch_words = bloom_words(batch_df, key_col, words, n_hashes)
-    prior = [
-        p
-        for p in _prior_partitions(state_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged = (
-            spark.read.parquet(latest)
-            .unionByName(batch_words)
-            .groupBy("word_idx")
-            .agg(F.bit_or("word").alias("word"))
-        )
-    else:
-        merged = batch_words
-    write_batch_idempotent(merged.localCheckpoint(eager=True), batch_id, state_dir)
+    fold_counter_batch(batch_words, batch_id, state_dir, ["word_idx"], F.bit_or)
 
 
 def run_streaming_bloom_sketch(
@@ -1877,33 +1715,22 @@ def run_streaming_bloom_sketch(
     availableNow and return the FINAL ``(word_idx, word)`` table —
     asserted equal to the one-shot ``bloom_words`` on the same rows,
     bit for bit."""
-    import os
-
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: bloom_word_batch(
-                df, bid, state_dir, key_col, words, n_hashes
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: bloom_word_batch(
+            df, bid, state_dir, key_col, words, n_hashes
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(state_dir)
-        else []
-    )
+    parts = batch_partitions(state_dir)
     if not parts:
         return spark.createDataFrame([], "word_idx bigint, word bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(state_dir, final))
+    return spark.read.parquet(parts[-1])
 
 
 def rollup_cascade_batch(
@@ -1953,21 +1780,7 @@ def rollup_cascade_batch(
     batch_counters = batch_df.groupBy(*cell).agg(
         F.count("*").alias("cnt"), F.sum(value_col).alias("sv")
     )
-    prior_c = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior_c:
-        latest = max(prior_c, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged_c = (
-            spark.read.parquet(latest)
-            .unionByName(batch_counters)
-            .groupBy("day", "event_type")
-            .agg(F.sum("cnt").alias("cnt"), F.sum("sv").alias("sv"))
-        )
-    else:
-        merged_c = batch_counters
+    fold_counter_batch(batch_counters, batch_id, counter_dir, ["day", "event_type"])
 
     w_cell = Window.partitionBy("day", "event_type").orderBy("h")
     batch_sketch = (
@@ -1978,15 +1791,10 @@ def rollup_cascade_batch(
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
-    prior_s = [
-        p
-        for p in _prior_partitions(sketch_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
+    prior_s = batch_partitions(sketch_dir, before=batch_id)
     if prior_s:
-        latest = max(prior_s, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
         union = (
-            spark.read.parquet(latest)
+            spark.read.parquet(prior_s[-1])
             .select("day", "event_type", "h")
             .unionByName(batch_sketch)
             .distinct()  # a user seen in prior batches re-hashes identically
@@ -1995,10 +1803,6 @@ def rollup_cascade_batch(
         union = batch_sketch
     merged_s = union.withColumn("rn", F.row_number().over(w_cell)).filter(
         F.col("rn") <= k
-    )
-
-    write_batch_idempotent(
-        merged_c.localCheckpoint(eager=True), batch_id, counter_dir
     )
     write_batch_idempotent(
         merged_s.localCheckpoint(eager=True), batch_id, sketch_dir
@@ -2019,8 +1823,6 @@ def run_streaming_rollup(
     (day, event_type, n_events, sum_value, users_kmv) from the two
     state tables — asserted cell-for-cell against the one-shot cascade
     on the same rows (sums exactly, estimates bit-for-bit)."""
-    import os
-
     from pos_pipeline_core_etl_spark.operators.sketches import kmv_estimate_col
 
     raw = (
@@ -2028,40 +1830,21 @@ def run_streaming_rollup(
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: rollup_cascade_batch(
-                df, bid, counter_dir, sketch_dir, k=k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: rollup_cascade_batch(df, bid, counter_dir, sketch_dir, k=k),
     )
-    q.awaitTermination()
-
-    def _final(base: str) -> str | None:
-        parts = (
-            [d for d in os.listdir(base) if d.startswith("batch_id=")]
-            if os.path.isdir(base)
-            else []
-        )
-        if not parts:
-            return None
-        return os.path.join(
-            base, max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-        )
-
-    c_part, s_part = _final(counter_dir), _final(sketch_dir)
-    if c_part is None:
+    c_parts, s_parts = batch_partitions(counter_dir), batch_partitions(sketch_dir)
+    if not c_parts:
         return spark.createDataFrame(
             [],
             "day date, event_type string, n_events bigint, "
             "sum_value double, users_kmv double",
         )
-    counters = spark.read.parquet(c_part)
+    counters = spark.read.parquet(c_parts[-1])
     sk = (
-        spark.read.parquet(s_part)
+        spark.read.parquet(s_parts[-1])
         .groupBy("day", "event_type")
         .agg(F.count("*").alias("n_vals"), F.max("h").alias("h_k"))
     )
@@ -2102,26 +1885,10 @@ def cms_grouped_counter_batch(
         cms_counters_grouped,
     )
 
-    spark = batch_df.sparkSession
     batch_counters = cms_counters_grouped(
         batch_df, group_col, key_col, depth, width
     )
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-        merged = (
-            spark.read.parquet(latest)
-            .unionByName(batch_counters)
-            .groupBy("g", "d", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        merged = batch_counters
-    write_batch_idempotent(merged.localCheckpoint(eager=True), batch_id, counter_dir)
+    fold_counter_batch(batch_counters, batch_id, counter_dir, ["g", "d", "b"])
 
 
 def run_streaming_cms_grouped_sketch(
@@ -2139,32 +1906,19 @@ def run_streaming_cms_grouped_sketch(
     with availableNow and return the FINAL ``(g, d, b, cnt)`` counter
     table — asserted equal to the one-shot ``cms_counters_grouped`` on
     the same rows, cell for cell."""
-    import os
-
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
         .parquet(stream_dir)
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: cms_grouped_counter_batch(
-                df, bid, counter_dir, group_col, key_col, depth, width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        raw,
+        checkpoint_dir,
+        lambda df, bid: cms_grouped_counter_batch(
+            df, bid, counter_dir, group_col, key_col, depth, width
+        ),
     )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
+    parts = batch_partitions(counter_dir)
     if not parts:
-        return spark.createDataFrame(
-            [], "g string, d int, b bigint, cnt bigint"
-        )
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+        return spark.createDataFrame([], "g string, d int, b bigint, cnt bigint")
+    return spark.read.parquet(parts[-1])

@@ -538,32 +538,6 @@ class TestConnectedComponents:
         }
         assert set(got.values()) == {0}
 
-    def test_prepartition_edges_branch_matches_default(self, spark):
-        """ADVICE r12: the ``spark.pos.cc.prepartitionEdges=true`` branch
-        (hash-partitioned persisted edge cache, the huge-graph path) had
-        no test — assert it produces IDENTICAL labels to the default
-        path on a 400-node chain (long diameter, exercises many rounds
-        and the final unpersist)."""
-        from pos_pipeline_core_etl_spark.operators.dedup import connected_components
-
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(399)], "doc_a long, doc_b long"
-        )
-        want = {
-            r["id"]: r["component_id"]
-            for r in connected_components(chain).collect()
-        }
-        spark.conf.set("spark.pos.cc.prepartitionEdges", "true")
-        try:
-            got = {
-                r["id"]: r["component_id"]
-                for r in connected_components(chain).collect()
-            }
-        finally:
-            spark.conf.unset("spark.pos.cc.prepartitionEdges")
-        assert got == want
-        assert set(got.values()) == {0}
-
     @staticmethod
     def _persisted_rdd_count(spark) -> int:
         """Live persisted-RDD count from the JVM SparkContext — the
